@@ -4048,8 +4048,10 @@ def q_boundary_census(spark, sf_dir):
 SQL_BOUNDARY_CENSUS = """
 WITH fl AS (
   SELECT o_custkey,
-         coalesce(arg_min(o_orderstatus, o_orderkey), '__null__') AS f,
-         coalesce(arg_max(o_orderstatus, o_orderkey), '__null__') AS l
+         coalesce(arg_min(coalesce(o_orderstatus, '__null__'), o_orderkey),
+                  '__null__') AS f,
+         coalesce(arg_max(coalesce(o_orderstatus, '__null__'), o_orderkey),
+                  '__null__') AS l
   FROM orders GROUP BY 1
 )
 SELECT f AS "first", l AS "last", CAST(count(*) AS BIGINT) AS n_convs
@@ -4081,8 +4083,10 @@ def q_boundary_violations(spark, sf_dir):
 SQL_BOUNDARY_VIOLATIONS = """
 WITH fl AS (
   SELECT o_custkey,
-         coalesce(arg_min(o_orderstatus, o_orderkey), '__null__') AS f,
-         coalesce(arg_max(o_orderstatus, o_orderkey), '__null__') AS l
+         coalesce(arg_min(coalesce(o_orderstatus, '__null__'), o_orderkey),
+                  '__null__') AS f,
+         coalesce(arg_max(coalesce(o_orderstatus, '__null__'), o_orderkey),
+                  '__null__') AS l
   FROM orders GROUP BY 1
 )
 SELECT o_custkey, 'bad_first' AS code, f AS value
@@ -4508,13 +4512,13 @@ WITH turns AS (
   WHERE user_id % 7 = 0
 ), entries AS (
   SELECT user_id, event_id,
-         CAST(event_id AS VARCHAR) || ':'
+         coalesce(CAST(event_id AS VARCHAR), '__null__') || ':'
            || CAST(coalesce(length(props), -1) AS VARCHAR) || ':'
            || coalesce(props, '') AS e
   FROM turns
 ), fps AS (
   SELECT user_id,
-         md5(string_agg(e, '' ORDER BY event_id, e)) AS fingerprint,
+         md5(string_agg(e, '' ORDER BY event_id NULLS FIRST, e)) AS fingerprint,
          CAST(count(*) AS BIGINT) AS n_turns
   FROM entries GROUP BY 1
 ), groups AS (

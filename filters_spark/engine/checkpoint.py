@@ -42,28 +42,32 @@ STATE_VERSION = 2
 
 def suite_fingerprint(suite: ValidationSuite) -> str:
     """Stable digest of the suite config that determines what the stored
-    per-bucket state MEANS (rules, keys, bucket count, stat/drift
-    columns).  Specs without a stable ``__repr__`` fall back to their
-    class name, so the fingerprint can never false-refuse a valid resume
-    on object identity — it only catches real config drift."""
+    per-bucket state MEANS (rules, table rules, keys, bucket count,
+    stat/drift columns).  Specs without a stable ``__repr__`` fall back
+    to their class name, so the fingerprint can never false-refuse a
+    valid resume on object identity — it only catches real config
+    drift.  Table rules enter only when set, so a suite without them
+    keeps the digest its manifests were written with."""
     import hashlib
 
     def sig(v) -> str:
         r = repr(v)
         return type(v).__name__ if " object at 0x" in r else r
 
-    spec = repr(
-        {
-            "rules": {k: sig(v) for k, v in sorted(suite.rules.items())},
-            "conv": suite.conv,
-            "idx": suite.idx,
-            "n_buckets": suite.n_buckets,
-            "stat_columns": suite.stat_columns,
-            "drift_cols": suite.drift_cols,
-            "length_col": suite.length_col,
+    spec = {
+        "rules": {k: sig(v) for k, v in sorted(suite.rules.items())},
+        "conv": suite.conv,
+        "idx": suite.idx,
+        "n_buckets": suite.n_buckets,
+        "stat_columns": suite.stat_columns,
+        "drift_cols": suite.drift_cols,
+        "length_col": suite.length_col,
+    }
+    if suite.table_rules:
+        spec["table_rules"] = {
+            k: sig(v) for k, v in sorted(suite.table_rules.items())
         }
-    )
-    return hashlib.sha256(spec.encode()).hexdigest()[:16]
+    return hashlib.sha256(repr(spec).encode()).hexdigest()[:16]
 
 
 class CheckpointManifest:
@@ -248,6 +252,7 @@ def run_resumable(
                     "n_convs": 0,
                     "gappy_convs": 0,
                     "bucket_pass": True,
+                    **({"rule_fails": 0} if suite.table_rules else {}),
                 }
             row.pop("bucket", None)
             payload = {
@@ -267,6 +272,8 @@ def run_resumable(
 
     # aggregate lineage across all manifest entries
     total = {"n_rows": 0, "n_invalid": 0, "dup_keys": 0, "gappy_convs": 0}
+    if suite.table_rules:
+        total["rule_fails"] = 0
     passed = True
     states: list[dict[str, str]] = []
     hist_states: list[dict[str, list[int]]] = []

@@ -1,17 +1,29 @@
-"""Distribution-drift checks (BASELINE.json north_star: "role/tool
-frequency KL-divergence and text-length PSI against a baseline snapshot").
+"""Distribution-drift checks against a baseline snapshot (BASELINE.json
+north_star: "role/tool frequency KL-divergence and text-length PSI
+against a baseline snapshot").
 
-The heavy part — frequency / histogram aggregation — is distributed (one
-hash agg per side).  The divergence math runs on the collected frequency
-tables, which are tiny (|categories| or |buckets| rows), per SURVEY.md
-§4.3(6).
+Every counting check here is a small finalizer over ONE table,
+:func:`_two_sample_counts`: ``(group…, __k, nc, nb)`` — per key (and
+group) the number of ``current`` rows (``nc``) and ``baseline`` rows
+(``nb``).  Both sides are tagged, unioned and counted in a single hash
+aggregation (map-side combine collapses the corpus to #distinct-keys
+rows before the shuffle); the optional top-k guard folds the
+cardinality tail into ``'__other__'`` by combined count within each
+group.  With no baseline the table is the plain one-sided count — no
+tag, no union — which is what :func:`frequencies`,
+:func:`length_histogram` and the single-scan profile use.
+
+The finalizers only ever touch that bounded table: chi², JS and
+per-group PSI attach broadcast side totals, KS and W1 run one
+running-CDF window, and the profile paths normalise on the driver
+(|categories| or |buckets| rows, per SURVEY.md §4.3(6)).
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -20,6 +32,94 @@ from pyspark.sql import functions as F
 #: accidental ``frequencies()`` over a free-text / id column must not
 #: flood the driver with 10^8 rows.
 DEFAULT_MAX_CATEGORIES = 10_000
+
+
+def _category(c: Column) -> Column:
+    """Categorical drift key: the value as a string, NULL as the literal
+    ``'__null__'`` so presence drift stays visible."""
+    return F.coalesce(c.cast("string"), F.lit("__null__"))
+
+
+def _two_sample_counts(
+    current: DataFrame,
+    baseline: DataFrame | None,
+    key: Column,
+    group_cols: tuple | list = (),
+    max_categories: int | None = None,
+) -> DataFrame:
+    """The count table behind every drift check: ``(group…, __k, nc,
+    nb)`` — per ``key`` value within each ``group_cols`` group, the
+    number of ``current`` rows (``nc``) and ``baseline`` rows (``nb``).
+    Both sides are tagged with 1/0 counters and unioned into ONE hash
+    aggregation.  ``baseline=None`` gives the one-sided ``(group…, __k,
+    nc)`` count: no tag, no union.
+
+    ``max_categories`` keeps the k keys with the largest combined count
+    per group (ties broken by key ascending, so every engine folds
+    identically) and folds the rest into ``'__other__'``, mass
+    preserved.  The rank runs over the aggregated table (one row per
+    DISTINCT key) with Spark's external sort — a pathological
+    10^8-distinct-key column makes one sorter spill to disk and finish,
+    never a driver transfer."""
+    g = list(group_cols)
+    if baseline is None:
+        ns, n = ["nc"], F.col("nc")
+        counts = current.groupBy(*g, key.alias("__k")).agg(
+            F.count(F.lit(1)).alias("nc")
+        )
+    else:
+        ns, n = ["nc", "nb"], F.col("nc") + F.col("nb")
+
+        def tag(df: DataFrame, c: int, b: int) -> DataFrame:
+            tags = [F.lit(c).alias("nc"), F.lit(b).alias("nb")]
+            return df.select(*g, key.alias("__k"), *tags)
+
+        counts = (
+            tag(current, 1, 0)
+            .unionAll(tag(baseline, 0, 1))
+            .groupBy(*g, "__k")
+            .agg(*[F.sum(c).alias(c) for c in ns])
+        )
+    if max_categories is None:
+        return counts
+    w = Window.partitionBy(*g).orderBy(F.desc(n), F.col("__k"))
+    keep = F.row_number().over(w) <= max_categories
+    return (
+        counts.withColumn(
+            "__k", F.when(keep, F.col("__k")).otherwise(F.lit("__other__"))
+        )
+        .groupBy(*g, "__k")
+        .agg(*[F.sum(c).alias(c) for c in ns])
+    )
+
+
+def _mass(counts: DataFrame, alias: str) -> DataFrame:
+    """``(alias, p)``: a one-sided count table over its broadcast total."""
+    total = counts.agg(F.sum("nc").alias("t"))
+    return counts.crossJoin(F.broadcast(total)).select(
+        F.col("__k").alias(alias), (F.col("nc") / F.col("t")).alias("p")
+    )
+
+
+def _with_totals(
+    frame: DataFrame, counts: DataFrame, group_cols: tuple | list = ()
+) -> DataFrame:
+    """``frame`` plus the per-group side totals ``__tc``/``__tb`` of a
+    two-sample count table: a group-keyed join (AQE broadcasts when
+    #groups is small), or a broadcast 1-row cross join without groups."""
+    g = list(group_cols)
+    tot = counts.groupBy(*g).agg(
+        F.sum("nc").alias("__tc"), F.sum("nb").alias("__tb")
+    )
+    return frame.join(tot, g) if g else frame.crossJoin(F.broadcast(tot))
+
+
+def _sizes() -> list[Column]:
+    """``(n_current, n_baseline)`` from the attached side totals."""
+    return [
+        F.max("__tc").cast("long").alias("n_current"),
+        F.max("__tb").cast("long").alias("n_baseline"),
+    ]
 
 
 def frequencies(
@@ -38,48 +138,8 @@ def frequencies(
     well-defined).  The ranking runs distributed over the *aggregated*
     counts table — the driver never sees more than k+1 rows however
     high the column's cardinality.  ``None`` disables."""
-    c = F.col(col) if isinstance(col, str) else col
-    counts = df.groupBy(
-        F.coalesce(c.cast("string"), F.lit("__null__")).alias(alias)
-    ).agg(F.count(F.lit(1)).alias("n"))
-    counts = _cap_categories(counts, alias, max_categories)
-    total = counts.agg(F.sum("n").alias("t"))
-    return counts.crossJoin(F.broadcast(total)).select(
-        alias, (F.col("n") / F.col("t")).alias("p")
-    )
-
-
-def _cap_categories(
-    counts: DataFrame,
-    alias: str,
-    max_categories: int | None,
-    partition_cols: tuple = (),
-) -> DataFrame:
-    """Collapse all but the ``max_categories`` most frequent keys (per
-    ``partition_cols`` group, if any) into ``'__other__'`` — distributed
-    (window rank + re-aggregate over the already-aggregated counts).
-
-    The rank runs over the counts table (one row per DISTINCT key, i.e.
-    post-aggregation), sorted with Spark's external sort — a
-    pathological 10^8-distinct-key column makes one sorter spill to
-    disk and finish, never a driver transfer.  That bounded worst case
-    is the point of the guard; columns one actually tracks drift on
-    have thousands of categories at most."""
-    if max_categories is None:
-        return counts
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*partition_cols).orderBy(
-        F.desc("n"), F.col(alias)
-    )
-    keep = F.row_number().over(w) <= max_categories
-    return (
-        counts.withColumn(
-            alias, F.when(keep, F.col(alias)).otherwise(F.lit("__other__"))
-        )
-        .groupBy(*partition_cols, alias)
-        .agg(F.sum("n").alias("n"))
-    )
+    c = _category(F.col(col) if isinstance(col, str) else col)
+    return _mass(_two_sample_counts(df, None, c, (), max_categories), alias)
 
 
 def _freq_dict(freq: DataFrame, alias: str = "k") -> dict[str, float]:
@@ -176,7 +236,7 @@ def cat_entry(name: str, col: Column) -> Column:
     """One ``(dim, key)`` profile entry for a categorical column."""
     return F.struct(
         F.lit(f"cat:{name}").alias("dim"),
-        F.coalesce(col.cast("string"), F.lit("__null__")).alias("k"),
+        _category(col).alias("k"),
     )
 
 
@@ -197,20 +257,18 @@ def profile_from_entries(
     structs, ONE hash aggregation, normalise on the driver.  The collect
     is bounded to ``max_categories`` keys *per dimension* (tail →
     ``'__other__'``, see :func:`frequencies`)."""
-    agg = (
-        df.select(F.explode(F.array(*entries)).alias("e"))
-        .groupBy(F.col("e.dim").alias("dim"), F.col("e.k").alias("k"))
-        .agg(F.count(F.lit(1)).alias("n"))
+    pairs = df.select(F.explode(F.array(*entries)).alias("e")).select(
+        "e.dim", "e.k"
     )
-    counts = _cap_categories(
-        agg, "k", max_categories, partition_cols=("dim",)
+    counts = _two_sample_counts(
+        pairs, None, F.col("k"), ("dim",), max_categories
     ).collect()
     totals: dict[str, int] = {}
     for r in counts:
-        totals[r["dim"]] = totals.get(r["dim"], 0) + r["n"]
+        totals[r["dim"]] = totals.get(r["dim"], 0) + r["nc"]
     out: dict[str, dict[str, float]] = {}
     for r in counts:
-        out.setdefault(r["dim"], {})[r["k"]] = r["n"] / totals[r["dim"]]
+        out.setdefault(r["dim"], {})[r["__k"]] = r["nc"] / totals[r["dim"]]
     return out
 
 
@@ -223,13 +281,7 @@ def length_histogram(
     """Text-length histogram: fixed-width buckets with an overflow bucket;
     nulls get bucket -1.  Distributed hash agg, ``(bucket, p)``."""
     bucket = length_bucket(col, bucket_width, n_buckets)
-    counts = df.groupBy(bucket.alias("bucket")).agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    total = counts.agg(F.sum("n").alias("t"))
-    return counts.crossJoin(F.broadcast(total)).select(
-        "bucket", (F.col("n") / F.col("t")).alias("p")
-    )
+    return _mass(_two_sample_counts(df, None, bucket), "bucket")
 
 
 def psi(
@@ -270,49 +322,37 @@ def ks_statistic(
     introduced is at most the mass of one lattice cell).  Totals ride a
     broadcast 1-row cross join — no driver action anywhere.
     """
-    def side(df: DataFrame, nc: int, nb: int) -> DataFrame:
-        v = F.col(col).cast("double")
-        if grid is not None:
-            v = F.round(v / F.lit(float(grid)), 0) * F.lit(float(grid))
-        return (
-            df.where(F.col(col).isNotNull())
-            .select(
-                v.alias("v"),
-                F.lit(nc).alias("nc"),
-                F.lit(nb).alias("nb"),
-            )
-        )
-
-    counts = (
-        side(current, 1, 0)
-        .unionAll(side(baseline, 0, 1))
-        .groupBy("v")
-        .agg(F.sum("nc").alias("nc"), F.sum("nb").alias("nb"))
+    return _running_cdf(current, baseline, col, grid).agg(
+        F.max("gap").alias("ks_stat"), *_sizes()
     )
-    from pyspark.sql import Window
 
-    w = (
-        Window.orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+def _running_cdf(
+    current: DataFrame, baseline: DataFrame, col: str, grid: float | None
+) -> DataFrame:
+    """Shared core of :func:`ks_statistic` and
+    :func:`wasserstein_distance`: one row per distinct non-null value
+    (snapped to ``grid`` if given) with ``gap = |F_cur(v) − F_base(v)|``
+    and ``dv`` = the distance to the next value, from ONE window over
+    the two-sample value table, plus the side totals.  Catalyst prunes
+    ``dv`` from the window when the caller never reads it."""
+    v = F.col(col).cast("double")
+    if grid is not None:
+        v = F.round(v / F.lit(float(grid)), 0) * F.lit(float(grid))
+    present = F.col(col).isNotNull()
+    counts = _two_sample_counts(
+        current.where(present), baseline.where(present), v
     )
+    order = Window.orderBy("__k")
+    upto = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     cum = counts.select(
-        F.sum("nc").over(w).alias("cc"),
-        F.sum("nb").over(w).alias("cb"),
+        F.sum("nc").over(upto).alias("cc"),
+        F.sum("nb").over(upto).alias("cb"),
+        (F.lead("__k").over(order) - F.col("__k")).alias("dv"),
     )
-    totals = counts.agg(
-        F.sum("nc").alias("tc"), F.sum("nb").alias("tb")
-    )
-    return (
-        cum.crossJoin(F.broadcast(totals))
-        .agg(
-            F.max(
-                F.abs(
-                    F.col("cc") / F.col("tc") - F.col("cb") / F.col("tb")
-                )
-            ).alias("ks_stat"),
-            F.max("tc").cast("long").alias("n_current"),
-            F.max("tb").cast("long").alias("n_baseline"),
-        )
+    gap = F.abs(F.col("cc") / F.col("__tc") - F.col("cb") / F.col("__tb"))
+    return _with_totals(cum, counts).select(
+        gap.alias("gap"), "dv", "__tc", "__tb"
     )
 
 
@@ -351,59 +391,25 @@ def chi2_statistic(
     ranks beyond it fold into ``'__other__'`` (rank by combined count,
     ties broken by category value, so both engines fold identically).
     """
-    def side(df: DataFrame, nc: int, nb: int) -> DataFrame:
-        k = F.coalesce(F.col(col).cast("string"), F.lit("__null__"))
-        return df.select(
-            k.alias("k"),
-            F.lit(nc).alias("nc"),
-            F.lit(nb).alias("nb"),
-        )
-
-    counts = (
-        side(current, 1, 0)
-        .unionAll(side(baseline, 0, 1))
-        .groupBy("k")
-        .agg(F.sum("nc").alias("nc"), F.sum("nb").alias("nb"))
-    )
-    if max_categories is not None:
-        from pyspark.sql import Window
-
-        w = Window.orderBy(
-            (F.col("nc") + F.col("nb")).desc(), F.col("k").asc()
-        )
-        counts = (
-            counts.withColumn("__rk", F.row_number().over(w))
-            .select(
-                F.when(F.col("__rk") <= max_categories, F.col("k"))
-                .otherwise(F.lit("__other__"))
-                .alias("k"),
-                "nc",
-                "nb",
-            )
-            .groupBy("k")
-            .agg(F.sum("nc").alias("nc"), F.sum("nb").alias("nb"))
-        )
-    totals = counts.agg(
-        F.sum("nc").alias("tc"), F.sum("nb").alias("tb")
+    counts = _two_sample_counts(
+        current, baseline, _category(F.col(col)), max_categories=max_categories
     )
     row = F.col("nc") + F.col("nb")
-    grand = (F.col("tc") + F.col("tb")).cast("double")
-    ec = row * F.col("tc") / grand
-    eb = row * F.col("tb") / grand
+    grand = (F.col("__tc") + F.col("__tb")).cast("double")
+    ec = row * F.col("__tc") / grand
+    eb = row * F.col("__tb") / grand
     cell = (F.col("nc") - ec) * (F.col("nc") - ec) / ec + (
         F.col("nb") - eb
     ) * (F.col("nb") - eb) / eb
+    k1 = F.count(F.lit(1)) - 1
     return (
-        counts.crossJoin(F.broadcast(totals))
+        _with_totals(counts, counts)
         .agg(
             F.sum(cell).alias("chi2"),
-            (F.count(F.lit(1)) - 1).cast("long").alias("dof"),
-            F.max("tc").cast("long").alias("n_current"),
-            F.max("tb").cast("long").alias("n_baseline"),
+            k1.cast("long").alias("dof"),
+            *_sizes(),
             F.sum(row).cast("double").alias("__n"),
-            F.least(
-                F.count(F.lit(1)) - F.lit(1), F.lit(1)
-            ).cast("double").alias("__mindim"),
+            F.least(k1, F.lit(1)).cast("double").alias("__mindim"),
         )
         .select(
             "chi2",
@@ -450,48 +456,9 @@ def wasserstein_distance(
     ``grid=`` (fixed lattice; the W1 error introduced is at most half a
     lattice step).
     """
-    def side(df: DataFrame, nc: int, nb: int) -> DataFrame:
-        v = F.col(col).cast("double")
-        if grid is not None:
-            v = F.round(v / F.lit(float(grid)), 0) * F.lit(float(grid))
-        return df.where(F.col(col).isNotNull()).select(
-            v.alias("v"), F.lit(nc).alias("nc"), F.lit(nb).alias("nb")
-        )
-
-    counts = (
-        side(current, 1, 0)
-        .unionAll(side(baseline, 0, 1))
-        .groupBy("v")
-        .agg(F.sum("nc").alias("nc"), F.sum("nb").alias("nb"))
-    )
-    from pyspark.sql import Window
-
-    order = Window.orderBy("v")
-    cum = counts.select(
-        F.sum("nc")
-        .over(order.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .alias("cc"),
-        F.sum("nb")
-        .over(order.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .alias("cb"),
-        (F.lead("v").over(order) - F.col("v")).alias("dv"),
-    )
-    totals = counts.agg(F.sum("nc").alias("tc"), F.sum("nb").alias("tb"))
-    return (
-        cum.crossJoin(F.broadcast(totals))
-        .agg(
-            F.coalesce(
-                F.sum(
-                    F.abs(
-                        F.col("cc") / F.col("tc") - F.col("cb") / F.col("tb")
-                    )
-                    * F.col("dv")
-                ),
-                F.lit(0.0),
-            ).alias("w1"),
-            F.max("tc").cast("long").alias("n_current"),
-            F.max("tb").cast("long").alias("n_baseline"),
-        )
+    return _running_cdf(current, baseline, col, grid).agg(
+        F.coalesce(F.sum(F.col("gap") * F.col("dv")), F.lit(0.0)).alias("w1"),
+        *_sizes(),
     )
 
 
@@ -523,39 +490,11 @@ def js_divergence(
     exactly as chi2 does (rank by combined count, category-value
     tiebreak — both engines fold identically).
     """
-    def side(df: DataFrame, nc: int, nb: int) -> DataFrame:
-        k = F.coalesce(F.col(col).cast("string"), F.lit("__null__"))
-        return df.select(
-            k.alias("k"), F.lit(nc).alias("nc"), F.lit(nb).alias("nb")
-        )
-
-    counts = (
-        side(current, 1, 0)
-        .unionAll(side(baseline, 0, 1))
-        .groupBy("k")
-        .agg(F.sum("nc").alias("nc"), F.sum("nb").alias("nb"))
+    counts = _two_sample_counts(
+        current, baseline, _category(F.col(col)), max_categories=max_categories
     )
-    if max_categories is not None:
-        from pyspark.sql import Window
-
-        w = Window.orderBy(
-            (F.col("nc") + F.col("nb")).desc(), F.col("k").asc()
-        )
-        counts = (
-            counts.withColumn("__rk", F.row_number().over(w))
-            .select(
-                F.when(F.col("__rk") <= max_categories, F.col("k"))
-                .otherwise(F.lit("__other__"))
-                .alias("k"),
-                "nc",
-                "nb",
-            )
-            .groupBy("k")
-            .agg(F.sum("nc").alias("nc"), F.sum("nb").alias("nb"))
-        )
-    totals = counts.agg(F.sum("nc").alias("tc"), F.sum("nb").alias("tb"))
-    p = F.col("nc") / F.col("tc")
-    q = F.col("nb") / F.col("tb")
+    p = F.col("nc") / F.col("__tc")
+    q = F.col("nb") / F.col("__tb")
     m = (p + q) / F.lit(2.0)
     # p=0 or q=0 terms contribute 0 by the 0·ln(0) = 0 convention;
     # m > 0 always holds on observed categories, so ln(m) is safe.
@@ -564,13 +503,8 @@ def js_divergence(
         + F.when(q > 0, q * F.log(q / m)).otherwise(F.lit(0.0))
     ) / F.lit(2.0)
     scale = F.lit(1.0 / math.log(base)) if base is not None else F.lit(1.0)
-    return (
-        counts.crossJoin(F.broadcast(totals))
-        .agg(
-            (F.sum(cell) * scale).alias("jsd"),
-            F.max("tc").cast("long").alias("n_current"),
-            F.max("tb").cast("long").alias("n_baseline"),
-        )
+    return _with_totals(counts, counts).agg(
+        (F.sum(cell) * scale).alias("jsd"), *_sizes()
     )
 
 
@@ -603,9 +537,7 @@ def quantile_shift(
 
     def side(df: DataFrame, name: str) -> DataFrame:
         agg = df.where(F.col(col).isNotNull()).agg(
-            F.expr(
-                f"percentile({col}, array({', '.join(repr(float(q)) for q in qs)}))"
-            ).alias("__vs")
+            F.percentile(F.col(col), [float(q) for q in qs]).alias("__vs")
         )
         return agg.select(
             F.posexplode("__vs").alias("__i", name)
@@ -727,8 +659,8 @@ def psi_by_group(
     into ``'__other__'``, mass preserved) — the same driver-safety
     guard as :func:`frequencies`, ranked within each group.
 
-    Scale shape: ONE union + (group, category)-keyed hash aggregation
-    with conditional sums (map-side combine; the corpus collapses to
+    Scale shape: the (group, category)-keyed two-sample count table —
+    ONE union + hash aggregation (map-side combine; the corpus collapses to
     #groups × #categories rows before any join), per-group totals are
     a second agg over that bounded table, joined back group-keyed (AQE
     broadcasts when #groups is small); the PSI sum is a final
@@ -737,40 +669,8 @@ def psi_by_group(
     gcols = (
         [group_cols] if isinstance(group_cols, str) else list(group_cols)
     )
-    key = F.coalesce(F.col(col).cast("string"), F.lit("__null__"))
-
-    def tagged(df: DataFrame, c: int, b: int) -> DataFrame:
-        return df.select(
-            *[F.col(g) for g in gcols],
-            key.alias("__k"),
-            F.lit(c).alias("__c"),
-            F.lit(b).alias("__b"),
-        )
-
-    u = tagged(current, 1, 0).unionAll(tagged(baseline, 0, 1))
-    counts = u.groupBy(*gcols, "__k").agg(
-        F.sum("__c").alias("nc"), F.sum("__b").alias("nb")
-    )
-    if max_categories is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(*gcols).orderBy(
-            F.desc(F.col("nc") + F.col("nb")), F.col("__k")
-        )
-        keep = F.row_number().over(w) <= max_categories
-        counts = (
-            counts.withColumn(
-                "__k",
-                F.when(keep, F.col("__k")).otherwise(F.lit("__other__")),
-            )
-            .groupBy(*gcols, "__k")
-            .agg(F.sum("nc").alias("nc"), F.sum("nb").alias("nb"))
-        )
-    tot = counts.groupBy(*gcols).agg(
-        F.sum("nc").alias("__tc"), F.sum("nb").alias("__tb")
-    )
-    j = counts.join(tot, gcols) if gcols else counts.crossJoin(
-        F.broadcast(tot)
+    counts = _two_sample_counts(
+        current, baseline, _category(F.col(col)), gcols, max_categories
     )
     p = F.greatest(F.col("nc") / F.col("__tc"), F.lit(float(eps)))
     q = F.greatest(F.col("nb") / F.col("__tb"), F.lit(float(eps)))
@@ -778,8 +678,6 @@ def psi_by_group(
         (F.col("__tc") > 0) & (F.col("__tb") > 0),
         (p - q) * F.log(p / q),
     )
-    return j.groupBy(*gcols).agg(
-        F.sum(term).alias("psi"),
-        F.max("__tc").cast("long").alias("n_current"),
-        F.max("__tb").cast("long").alias("n_baseline"),
+    return _with_totals(counts, counts, gcols).groupBy(*gcols).agg(
+        F.sum(term).alias("psi"), *_sizes()
     )

@@ -267,8 +267,10 @@ class ValidationSuite:
         """All drift dimensions in ONE scan per side (dist_profile);
         KL/PSI math runs on the collected frequency dicts (tiny).
         ``cur_profile`` (from :meth:`_cur_profile_from_rows`) skips the
-        current-side scan; the baseline side is scanned here — at real
-        scale the baseline profile is computed once and stored."""
+        current-side scan.  The baseline side is scanned on EVERY call:
+        nothing caches or stores its profile, so ``run_resumable``
+        rescans the baseline once per bucket group.  Cache or
+        pre-aggregate the baseline frame if that scan is costly."""
         cur = cur_profile or dist_profile(df, self.drift_cols, self.length_col)
         base = dist_profile(baseline, self.drift_cols, self.length_col)
         metrics: dict = {}

@@ -1,9 +1,11 @@
-"""Local stand-in for the driver's correctness gate: run every
-``__spark_entry__.queries()`` entry and its ``oracle_sql()`` twin on the
-same sf dir, compare row count, column names, and order-insensitive
-values.  Usage::
+"""Oracle parity check: run every ``__spark_entry__.queries()`` entry
+and its ``oracle_sql()`` twin (DuckDB) on the same sf dir, compare row
+count, column names, and order-insensitive values.  Usage::
 
-    PYTHONPATH=/root/repo python scripts/check_oracles.py [sf_dir] [name ...]
+    PYTHONPATH=. python scripts/check_oracles.py [sf_dir] [name ...]
+
+``oracle_db`` and ``compare`` are importable (tests/test_oracles.py
+runs a subset of the registry through them).
 """
 
 from __future__ import annotations
@@ -40,6 +42,41 @@ def normalise(df: pd.DataFrame) -> pd.DataFrame:
     return out
 
 
+def oracle_db(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB connection with one view per sf-dir parquet table."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(
+            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
+        )
+    return con
+
+
+def compare(sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
+    """Problems between a Spark result and its oracle result (empty
+    list = identical up to row order)."""
+    problems = []
+    if len(sdf) != len(odf):
+        problems.append(f"rowcount {len(sdf)} vs {len(odf)}")
+    if sorted(sdf.columns) != sorted(odf.columns):
+        problems.append(
+            f"schema {sorted(sdf.columns)} vs {sorted(odf.columns)}"
+        )
+    if not problems:
+        a, b = normalise(sdf), normalise(odf)
+        if not a.equals(b):
+            diff = (a != b).any(axis=1)
+            idx = diff[diff].index[:3]
+            problems.append(
+                "values differ, first rows:\n"
+                + "\n".join(
+                    f"  spark={a.loc[i].to_dict()}\n  duck ={b.loc[i].to_dict()}"
+                    for i in idx
+                )
+            )
+    return problems
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -59,11 +96,7 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = oracle_db(sf_dir)
 
     import __spark_entry__ as e
 
@@ -89,25 +122,7 @@ def main() -> int:
             print(f"FAIL {name}: oracle error: {ex}")
             failures.append(name)
             continue
-        problems = []
-        if len(sdf) != len(odf):
-            problems.append(f"rowcount {len(sdf)} vs {len(odf)}")
-        if sorted(sdf.columns) != sorted(odf.columns):
-            problems.append(
-                f"schema {sorted(sdf.columns)} vs {sorted(odf.columns)}"
-            )
-        if not problems:
-            a, b = normalise(sdf), normalise(odf)
-            if not a.equals(b):
-                diff = (a != b).any(axis=1)
-                idx = diff[diff].index[:3]
-                problems.append(
-                    "values differ, first rows:\n"
-                    + "\n".join(
-                        f"  spark={a.loc[i].to_dict()}\n  duck ={b.loc[i].to_dict()}"
-                        for i in idx
-                    )
-                )
+        problems = compare(sdf, odf)
         if problems:
             print(f"FAIL {name}: " + "; ".join(problems))
             failures.append(name)

@@ -1696,3 +1696,118 @@ def test_boundary_census_composite_idx_and_python_reference(spark):
         l = turns[-1][1] or "__null__"
         want[(f, l)] = want.get((f, l), 0) + 1
     assert got == want
+
+
+_ODD = "turn-len x"  # needs backticks in SQL text: hyphen and space
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "frequencies",
+        "length_histogram",
+        "ks_statistic",
+        "wasserstein_distance",
+        "chi2_statistic",
+        "js_divergence",
+        "psi_by_group",
+        "quantile_shift",
+    ],
+)
+def test_drift_ops_resolve_columns_needing_backticks(spark, op):
+    """Every drift op resolves its column (and group column) names as
+    identifiers, never as SQL text: the same data under a hyphen+space
+    name gives the same answer as under a plain name."""
+    from filters_spark.engine import drift
+
+    rows = [(i % 9 if i % 11 else None, "ab"[i % 2]) for i in range(60)]
+    base_rows = [(i % 6, "ab"[i % 3 % 2]) for i in range(50)]
+
+    def run(col, grp):
+        schema = f"`{col}` int, `{grp}` string"
+        cur = spark.createDataFrame(rows, schema)
+        base = spark.createDataFrame(base_rows, schema)
+        fn = getattr(drift, op)
+        if op in ("frequencies", "length_histogram"):
+            out = fn(cur, col)
+        elif op == "psi_by_group":
+            out = fn(cur, base, col, grp)
+        else:
+            out = fn(cur, base, col)
+        return sorted(tuple(r) for r in out.collect())
+
+    assert run(_ODD, "grp-a b") == run("v", "g")
+
+
+def _resume_rules_suite(**kw):
+    return ValidationSuite(
+        RULES,
+        n_buckets=8,
+        table_rules={
+            "tool_only_on_assistant": "tool IS NULL OR role = 'assistant'",
+            "idx_nonneg": "turn_idx >= 0",
+        },
+        **kw,
+    )
+
+
+def test_checkpoint_refuses_changed_table_rules(tmp_path, tdf, baseline):
+    """Table rules gate bucket_pass, so they are part of the suite
+    fingerprint: a resume under changed (or dropped) table rules is
+    refused.  A suite WITHOUT table rules keeps the fingerprint
+    manifests were written with before table rules entered it."""
+    from filters_spark.engine.checkpoint import suite_fingerprint
+
+    assert suite_fingerprint(ValidationSuite(RULES, n_buckets=8)) == (
+        "b68935b2496c876c"
+    )
+    manifest = CheckpointManifest(tmp_path / "mr")
+    partial = run_resumable(
+        tdf, _resume_rules_suite(), manifest, baseline=baseline,
+        buckets_per_job=2, fail_after_buckets=2,
+    )
+    assert partial["aborted"]
+    changed = ValidationSuite(
+        RULES, n_buckets=8, table_rules={"idx_nonneg": "turn_idx >= 1"}
+    )
+    for other in (changed, ValidationSuite(RULES, n_buckets=8)):
+        with pytest.raises(RuntimeError, match="suite config"):
+            run_resumable(tdf, other, manifest, baseline=baseline)
+
+
+def test_checkpoint_resume_totals_rule_fails(tmp_path, tdf, baseline):
+    """The resumed summary carries rule_fails, equal to the single-shot
+    verdict total; empty buckets record a zero count."""
+    # conversations land in buckets 0-3 only, so buckets 4-7 are empty
+    suite = _resume_rules_suite(
+        bucket_fn=lambda c, n: F.pmod(F.crc32(c), F.lit(n // 2)).cast("int")
+    )
+    single = suite.run(tdf)
+    expected = sum(r.rule_fails for r in single.verdicts.collect())
+    single.unpersist()
+    assert expected > 0
+    manifest = CheckpointManifest(tmp_path / "mf")
+    partial = run_resumable(
+        tdf, suite, manifest, baseline=baseline, buckets_per_job=2,
+        fail_after_buckets=3,
+    )
+    assert partial["aborted"]
+    final = run_resumable(tdf, suite, manifest, baseline=baseline,
+                          buckets_per_job=4)
+    assert final["completed"] == 8 and final["rule_fails"] == expected
+    empty = [manifest.read(b)["verdict"] for b in range(4, 8)]
+    assert all(v["n_rows"] == 0 and v["rule_fails"] == 0 for v in empty)
+
+
+def test_conv_fingerprints_null_idx_turn_counts(spark):
+    """A turn with a NULL idx still enters the digest: conversations
+    that differ only in that turn's text get different fingerprints."""
+    from filters_spark.engine import conv_fingerprints
+
+    df = spark.createDataFrame(
+        [("a", 0, "hi"), ("a", None, "x"), ("b", 0, "hi"), ("b", None, "y")],
+        "conv_id string, turn_idx int, text string",
+    )
+    out = {r.conv_id: r for r in conv_fingerprints(df).collect()}
+    assert out["a"].fingerprint != out["b"].fingerprint
+    assert out["a"].n_turns == out["b"].n_turns == 2

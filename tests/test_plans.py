@@ -230,3 +230,71 @@ def test_every_registered_query_avoids_unbounded_nested_loops(spark):
         if hits and name not in allowed:
             offenders[name] = hits
     assert not offenders, offenders
+
+
+def _ops(plan: str) -> dict[str, int]:
+    """Operator-name counts in a plan tree string."""
+    import re
+    from collections import Counter
+
+    return Counter(
+        re.match(r"[\s:|+-]*(?:\*\(\d+\)\s*)?(\w+)", line).group(1)
+        for line in plan.splitlines()
+    )
+
+
+def test_two_sample_drift_checks_plan_one_union(tdf):
+    """Every two-sample drift check counts both snapshots in ONE
+    tag → union → aggregate table, shared by the totals branch: exactly
+    one Union per physical plan.  Pinned with AQE off so the static
+    exchange reuse is visible in the plan string."""
+    from filters_spark.engine import (
+        chi2_statistic,
+        js_divergence,
+        ks_statistic,
+        psi_by_group,
+        wasserstein_distance,
+    )
+
+    spark = tdf.sparkSession
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        base = tdf.where(F.col("turn_idx") > 0)
+        for df in (
+            ks_statistic(tdf, base, "turn_idx"),
+            wasserstein_distance(tdf, base, "turn_idx", grid=1.0),
+            chi2_statistic(tdf, base, "role", max_categories=2),
+            js_divergence(tdf, base, "role"),
+            psi_by_group(tdf, base, "tool", "role"),
+        ):
+            assert _ops(plan_of(df))["Union"] == 1
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+
+
+def test_profile_plans_are_one_sided(tdf, monkeypatch):
+    """dist_profile and the suite's current-side profile count ONE side:
+    no Union, and the optimized plan keeps the operator mix of the
+    one-sided count plus its per-dimension top-k fold — 2 Aggregates
+    and 1 Window, the counts before the two-sample count table was
+    introduced."""
+    from filters_spark.engine.drift import dist_profile
+
+    seen = []
+    cls = type(tdf)
+    collect = cls.collect
+
+    def spy(self):
+        seen.append(
+            _ops(self._jdf.queryExecution().optimizedPlan().toString())
+        )
+        return collect(self)
+
+    monkeypatch.setattr(cls, "collect", spy)
+    suite = ValidationSuite(RULES, n_buckets=8)
+    dist_profile(tdf)
+    suite._cur_profile_from_rows(suite.row_results(tdf))
+    assert len(seen) == 2
+    for ops in seen:
+        assert (ops["Union"], ops["Aggregate"], ops["Window"]) == (0, 2, 1)
